@@ -23,7 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     Exercises the whole engine: frontier dequeue (window rank + politeness
     caps), salted repartition, mapInPandas fetch+parse into interleaved
-    span arrays, vectorized canonicalization, Bloom-prefiltered seen-set
+    span arrays, vectorized canonicalization, bucket-pruned seen-set
     anti-join, MERGE-back + lineage (SURVEY.md §3.4).
     """
     from pyspark.sql import functions as F
@@ -35,7 +35,7 @@ def entry(spark: SparkSession) -> DataFrame:
     n_hosts, page_space = 25, 500
     cfg = CrawlConfig(
         n_hosts=n_hosts, page_space=page_space, max_retries=2,
-        fetch_partitions=4, use_bloom=True, bloom_shards=4, bloom_bits=1 << 16,
+        fetch_partitions=4,
         # exercise the full sink surface in the flagship: raw bodies kept
         # for re-parse (S14) and the media-ref table (S13)
         keep_raw_body=True, write_media_table=True,

@@ -6,7 +6,10 @@ idiomatic Spark engine:
 
 - partitioned priority frontier over versioned parquet tables (Iceberg
   stand-in, see ``storage.py``) of interleaved text+media documents,
-- sharded Bloom URL-seen filter (broadcast + per-round delta merges),
+- exact URL-seen dedup: one anti-join per round against the seen table,
+  bucketed by url-hash so it opens only the buckets its candidates hit
+  (``bloom.py`` keeps a sharded Bloom prefilter as a library; rounds do
+  not use it),
 - per-host politeness buckets (robots disallow cache, crawl-delay gates)
   enforced via salted host-hash repartitioning,
 - URL canonicalization/hashing in vectorized Arrow/pandas UDFs,

@@ -15,53 +15,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import canon, politeness
-from .bloom import ShardedBloom
 from .round import CrawlConfig, RoundResult, run_round
 from .schemas import FRONTIER, HOST_STATE, LINEAGE, SEEN
 from .storage import TableStore
 
 
 class Crawler:
+    # no seen prefilter: perfbench/spans.py reads this to skip filter spans
+    bloom = None
+
     def __init__(self, spark: SparkSession, workdir: str, cfg: CrawlConfig):
         self.spark = spark
         self.cfg = cfg
         self.store = TableStore(spark, workdir)
-        self.bloom = self._make_filter()
-
-    def _make_filter(self):
-        """Seen-prefilter per config: bloom (default), cuckoo, or
-        bloom-dist (store-backed shards for filters too big for the
-        driver/broadcast).  All expose update_from_df; the filter only
-        changes WHICH candidates skip the exact anti-join, never the
-        result."""
-        if not self.cfg.use_bloom:
-            return None
-        if self.cfg.filter_kind == "cuckoo":
-            from .cuckoo import ShardedCuckoo
-
-            return ShardedCuckoo(self.cfg.cuckoo_buckets)
-        if self.cfg.filter_kind == "cuckoo-dist":
-            from .cuckoo import DistributedCuckoo
-
-            # capacity provisioned for the key budget (cuckoo_dist_buckets,
-            # the bloom_bits analog), split across shards — NOT the
-            # driver-resident total: a dist cuckoo sized like the broadcast
-            # one saturates (95%+ fill) within a round at bench scale
-            per_shard = max(64, self.cfg.cuckoo_dist_buckets // self.cfg.bloom_shards)
-            return DistributedCuckoo(
-                self.spark, self.store, self.cfg.bloom_shards, per_shard
-            )
-        if self.cfg.filter_kind == "bloom-dist":
-            from .bloom import DistributedBloom
-
-            return DistributedBloom(
-                self.spark, self.store, self.cfg.bloom_shards, self.cfg.bloom_bits
-            )
-        if self.cfg.filter_kind != "bloom":
-            # an unknown kind silently falling back to bloom would let a
-            # benchmark run mislabeled (caught in r5's cuckoo-dist leg)
-            raise ValueError(f"unknown filter_kind: {self.cfg.filter_kind!r}")
-        return ShardedBloom(self.cfg.bloom_shards, self.cfg.bloom_bits)
 
     # ------------------------------------------------------------ bootstrap
     def bootstrap(self, seeds: DataFrame, hosts: DataFrame) -> None:
@@ -101,23 +67,16 @@ class Crawler:
         self.store.write("hosts", hosts)
         self.store.write("host_state", self.spark.createDataFrame([], HOST_STATE))
         self.store.write("lineage", self.spark.createDataFrame([], LINEAGE))
-        if self.bloom is not None:
-            self.bloom.update_from_df(self.spark, self.store.read("seen"))
         self.store.commit_round(0)
 
     # ------------------------------------------------------------ resume
     def resume(self) -> int:
-        """Roll back to the last committed manifest; rebuild the Bloom
-        side-structure from the (authoritative) seen table.  A persistent
-        filter (DistributedBloom) lives in a store table whose pointer
-        the rollback already restored — no rebuild."""
+        """Roll back every table to the last committed manifest.  The seen
+        table is the only dedup state, so the pointer restore is all a
+        resume needs — nothing is rebuilt."""
         rid = self.store.restore_last_committed()
         if rid is None:
             raise RuntimeError("nothing to resume: no committed rounds")
-        if self.cfg.use_bloom:
-            self.bloom = self._make_filter()
-            if not getattr(self.bloom, "persistent", False):
-                self.bloom.update_from_df(self.spark, self.store.read("seen"))
         return rid
 
     # ------------------------------------------------------------ buckets
@@ -155,7 +114,6 @@ class Crawler:
                 self.store.read("seen"),
                 hosts_df,
                 self.store.read("host_state") if self.store.exists("host_state") else None,
-                self.bloom,
                 record_order=record_order,
                 materialize=self._materialize,
                 seen_reader=self._seen_reader if self.cfg.seen_buckets else None,
@@ -166,8 +124,6 @@ class Crawler:
                 # truly drained.
                 for df in out["_cached"]:
                     df.unpersist()
-                for b in out.get("_broadcasts", []):
-                    b.destroy()
                 remaining = (
                     self.store.read("frontier")
                     .filter(F.col("state").isin("pending", "retry"))
@@ -221,8 +177,6 @@ class Crawler:
                 )
             self.store.merge_upsert("host_state", out["host_updates"], key="host")
             self.store.append("lineage", out["lineage"])
-            if self.bloom is not None and res.new_urls:
-                self.bloom.update_from_df(self.spark, out["seen_delta"])
             self.store.commit_round(r)
             self.store.expire_snapshots(keep=expire_keep)
             # small-file maintenance (Iceberg rewrite_data_files analog):
@@ -234,8 +188,6 @@ class Crawler:
                     self.store.compact(t, max_members=32)
             for df in out["_cached"]:
                 df.unpersist()
-            for b in out.get("_broadcasts", []):
-                b.destroy()
             results.append(res)
         hosts_df.unpersist()
         return results
@@ -307,8 +259,6 @@ class Crawler:
             self.store.append(
                 "seen", self._with_seen_bucket(new.select("url_hash", "url"))
             )
-            if self.bloom is not None:
-                self.bloom.update_from_df(self.spark, new.select("url_hash"))
             self.store.commit_round(rid, extra={"seed_ingest": n_new})
         new.unpersist()
         return n_new
@@ -385,8 +335,6 @@ class Crawler:
                 immutable_partitions=["fetched", "dead"],
             )
             self.store.append("seen", self._with_seen_bucket(lost.select("url_hash", "url")))
-            if self.bloom is not None:
-                self.bloom.update_from_df(self.spark, lost.select("url_hash"))
             self.store.commit_round(rid, extra={"audit": n_lost})
         lost.unpersist()
         return n_lost

@@ -2,8 +2,8 @@
 
 dequeue (W1) → politeness gates (T2/T3) → salted repartition → fetch+parse
 (mapInPandas) → documents append → link extraction → canonicalize →
-Bloom prefilter + exact seen anti-join (J5) → MERGE-back (frontier /
-seen / host_state / documents) → per-partition lineage rows (T1).
+bucket-pruned exact seen anti-join (J5) → MERGE-back (frontier / seen /
+host_state / documents) → per-partition lineage rows (T1).
 
 The driver only sequences rounds; every data-touching step is a
 DataFrame op.
@@ -12,12 +12,11 @@ DataFrame op.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import bloom as bloom_mod
 from . import canon, fetch, frontier, parse, politeness
 from .schemas import FRONTIER, LINEAGE
 
@@ -30,24 +29,6 @@ class CrawlConfig:
     max_retries: int = 3
     fetch_partitions: int = 8
     salt: int = 8
-    use_bloom: bool = True
-    bloom_shards: int = 16
-    bloom_bits: int = 1 << 20
-    # seen-prefilter structure: "bloom" (OR-mergeable deltas — the scale
-    # default) or "cuckoo" (deletable, syncs with S9 delete-resolved)
-    filter_kind: str = "bloom"
-    cuckoo_buckets: int = 1 << 18
-    # capacity for the STORE-BACKED cuckoo ("cuckoo-dist"): total buckets
-    # across shards.  Sized like bloom_bits — for the key budget, not the
-    # driver heap (the dist form exists to be big).  A cuckoo past ~85%
-    # fill thrashes its kicking loop and saturated shards fail safe to
-    # "maybe"-everything, gutting the prefilter (measured r5: 1<<18 hit
-    # 95.6% fill + 4.1k drops on a 1M-key round wave).  1<<21 buckets =
-    # 8.4M slots / 16.8 MB — the bloom-dist footprint, 12% load at 1M.
-    cuckoo_dist_buckets: int = 1 << 21
-    # link canonicalization happens inside the fetch stage (fetch.py) —
-    # kept as a flag only to document the contract
-    canonicalize_links: bool = True
     # S14 raw-body retention: keep the response HTML on each document row
     # so parsers can re-run over old crawls (credit_person_web.py:234-249)
     keep_raw_body: bool = False
@@ -78,7 +59,6 @@ class CrawlConfig:
     # downstream stage (span assembly, dedup, MERGE-back, resume) is
     # unchanged.  Parity gates (refsim) only apply to the simnet default.
     fetch_fn: object = None
-    extra: dict = field(default_factory=dict)
 
 
 @dataclass
@@ -101,7 +81,6 @@ def run_round(
     seen_df: DataFrame,
     hosts_df: DataFrame,
     host_state_df: DataFrame | None,
-    bloom: bloom_mod.ShardedBloom | None,
     record_order: bool = False,
     materialize=None,
     seen_reader=None,
@@ -125,7 +104,6 @@ def run_round(
     t0 = time.monotonic()
     if materialize is None:
         materialize = lambda name, df: df.cache()  # noqa: E731
-    round_pins: list[DataFrame] = []  # extra intermediates to unpersist
 
     elig = politeness.eligible_hosts(hosts_df, host_state_df, round_id)
     batch = frontier.dequeue(
@@ -189,30 +167,14 @@ def run_round(
     cand = politeness.robots_allowed(cand, hosts_df).cache()
     n_cand = cand.count()
 
-    from .cuckoo import DistributedCuckoo, ShardedCuckoo, cuckoo_prefilter
-
-    if isinstance(bloom, ShardedCuckoo):
-        definite_new, maybe_seen, bloom_bc = cuckoo_prefilter(spark, cand, bloom)
-    elif isinstance(bloom, (bloom_mod.DistributedBloom, DistributedCuckoo)):
-        # pin the tagged frame: both halves + the bucket-id collect below
-        # consume it, and the shard cogroup must run ONCE per round
-        def _pin_tagged(df):
-            df = materialize("_bloom_tagged", df)
-            round_pins.append(df)
-            return df
-
-        definite_new, maybe_seen, bloom_bc = bloom.prefilter(cand, materialize=_pin_tagged)
-    else:
-        definite_new, maybe_seen, bloom_bc = bloom_mod.bloom_prefilter(spark, cand, bloom)
     if seen_reader is not None and cfg.seen_buckets:
         # bucket-pruned exact check: collect the candidate buckets (a
-        # bounded-size distinct over the post-Bloom survivors, reading
-        # only the cached cand) and open just those seen members.
-        # Correctness is unchanged — a bucket with no candidate hash
+        # bounded-size distinct reading only the cached cand) and open
+        # just those seen members.  A bucket with no candidate hash
         # cannot produce an anti-join match.
         cand_buckets = [
             r["b"]
-            for r in maybe_seen.select(
+            for r in cand.select(
                 canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("b")
             )
             .distinct()
@@ -221,8 +183,7 @@ def run_round(
         seen_scan = seen_reader(cand_buckets)
     else:
         seen_scan = seen_df
-    checked_new = maybe_seen.join(seen_scan.select("url_hash"), "url_hash", "left_anti")
-    new_links = definite_new.unionByName(checked_new).cache()
+    new_links = cand.join(seen_scan.select("url_hash"), "url_hash", "left_anti").cache()
 
     # ---- MERGE-able outputs
     updates = frontier.state_updates(results, round_id, cfg.max_retries)
@@ -290,10 +251,6 @@ def run_round(
         "media_delta": media_delta,
         "host_updates": host_updates,
         "lineage": lineage,
-        "_cached": [cand, new_links] + round_pins,
-        # round-scoped broadcasts: destroyed by the caller once the
-        # round's actions complete (never-destroyed per-round broadcasts
-        # leak driver+executor memory over a long crawl)
-        "_broadcasts": [b for b in [bloom_bc] if b is not None],
+        "_cached": [cand, new_links],
     }
     return res, out

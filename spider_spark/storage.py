@@ -787,11 +787,10 @@ class TableStore:
         totals (footer counts as written; logically-deleted rows still
         count until compact materializes the delete), outstanding
         equality-delete segments, partition spec, and whether the
-        snapshot originated from stage_append (WAP lineage — ``staged``;
-        it may since have been published) plus which one the pointer
-        currently serves.  Metadata-only: JSON reads, zero
-        parquet I/O — the audit surface a takedown/compliance review
-        reads before touching data."""
+        snapshot is staged (written by stage_append/append_to_branch and
+        never published) plus which one the pointer currently serves.
+        Metadata-only: JSON reads, zero parquet I/O — the audit surface a
+        takedown/compliance review reads before touching data."""
         out = []
         try:
             versions = sorted(
@@ -809,7 +808,7 @@ class TableStore:
                     "rows": sum(m.get("rows", 0) for m in man["members"]),
                     "deletes": len(man.get("deletes") or []),
                     "partition_col": man.get("partition_col"),
-                    "staged": "parent" in man,
+                    "staged": self._staged(man),
                     "current": v == cur,
                 }
             )
@@ -981,7 +980,21 @@ class TableStore:
                 f"table is at {cur} — re-stage on the current snapshot"
             )
         self._set_pointer(table, version)
+        self._mark_published(table, version, man)
         return version
+
+    @staticmethod
+    def _staged(manifest: dict) -> bool:
+        """A WAP/branch snapshot the table pointer has never served."""
+        return "parent" in manifest and not manifest.get("published")
+
+    def _mark_published(self, table: str, version: str, manifest: dict) -> None:
+        """Record that the pointer has served a staged snapshot, so it is a
+        valid rollback target from now on.  Written after the pointer
+        move: a crash in between leaves the snapshot marked staged, which
+        only refuses a rollback, never exposes unaudited rows."""
+        if self._staged(manifest):
+            self._write_manifest(table, version, {**manifest, "published": True})
 
     def rollback(self, table: str, version: str | None = None, round_id: int | None = None) -> str:
         """Delta ``RESTORE`` / Iceberg rollback analog: make the table
@@ -1005,7 +1018,8 @@ class TableStore:
         * a staged, never-published snapshot is refused — WAP audit
           candidates become visible through ``publish``'s parent CAS,
           and restoring one would expose unaudited rows while skipping
-          that gate.
+          that gate.  Once ``publish`` or ``fast_forward`` has served a
+          snapshot it is an ordinary rollback target.
 
         ``read_changes`` across a rollback raises by construction (the
         base member set is no longer a subset of the target's), exactly
@@ -1028,7 +1042,7 @@ class TableStore:
         if version == cur:
             return cur
         target = self._manifest(table, version)
-        if "parent" in target:
+        if self._staged(target):
             raise ValueError(
                 f"version {version} of '{table}' is a staged (WAP) snapshot — "
                 f"expose it with publish(), not rollback()"
@@ -1185,6 +1199,7 @@ class TableStore:
                 f"table is at {cur} — re-branch from the current snapshot"
             )
         self._set_pointer(table, r["version"])
+        self._mark_published(table, r["version"], self._manifest(table, r["version"]))
         self._write_ref(
             table, name, {"kind": "branch", "version": r["version"], "base": r["version"]}
         )

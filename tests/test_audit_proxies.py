@@ -14,7 +14,7 @@ N_HOSTS, PAGE_SPACE = 10, 200
 def test_audit_lost_requeues_exactly_the_missing(spark, tmp_path):
     cfg = CrawlConfig(
         n_hosts=N_HOSTS, page_space=PAGE_SPACE, max_retries=2,
-        fetch_partitions=4, use_bloom=True, bloom_shards=4, bloom_bits=1 << 14,
+        fetch_partitions=4,
     )
     c = Crawler(spark, str(tmp_path), cfg)
     seeds = synth.seed_list(spark, 40, N_HOSTS, PAGE_SPACE)
@@ -127,7 +127,7 @@ def test_media_table_sink_first_wins(spark, tmp_path):
 
     cfg = CrawlConfig(
         n_hosts=N_HOSTS, page_space=PAGE_SPACE, max_retries=2,
-        fetch_partitions=4, use_bloom=False, write_media_table=True,
+        fetch_partitions=4, write_media_table=True,
     )
     c = Crawler(spark, str(tmp_path), cfg)
     c.bootstrap(synth.seed_list(spark, 40, N_HOSTS, PAGE_SPACE), synth.hosts_config(spark, N_HOSTS))
@@ -165,8 +165,7 @@ def test_sink_flags_do_not_change_crawl_semantics(spark, tmp_path):
     ):
         cfg = CrawlConfig(
             n_hosts=N_HOSTS, page_space=PAGE_SPACE, max_retries=2,
-            fetch_partitions=4, use_bloom=True, bloom_shards=4,
-            bloom_bits=1 << 14, **flags,
+            fetch_partitions=4, **flags,
         )
         c = Crawler(spark, str(tmp_path / label), cfg)
         c.bootstrap(

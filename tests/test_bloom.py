@@ -59,53 +59,10 @@ def test_driver_budget_fails_fast():
     import pytest
 
     t0 = time.monotonic()
-    with pytest.raises(ValueError, match="DistributedBloom"):
+    with pytest.raises(ValueError, match="exact bucket-pruned seen anti-join"):
         ShardedBloom(n_shards=4096, bits_per_shard=1 << 25)
     assert time.monotonic() - t0 < 1.0
     # an explicit budget raise is honored
     b = ShardedBloom(n_shards=4, bits_per_shard=1 << 14,
                      driver_budget_bytes=1 << 20)
     assert b.nbytes <= 1 << 20
-
-
-def test_distributed_bloom_matches_broadcast(spark, tmp_path):
-    """Store-backed cogrouped membership == driver-broadcast membership
-    for identical inserts (same hash family, same bit layout)."""
-    from spider_spark.bloom import DistributedBloom
-    from spider_spark.storage import TableStore
-
-    seen = spark.createDataFrame([(i * 7919,) for i in range(200)], "url_hash long")
-    cand = spark.createDataFrame([(i * 7919,) for i in range(150, 350)], "url_hash long")
-    sb = ShardedBloom(n_shards=8, bits_per_shard=1 << 12, n_hashes=3)
-    sb.update_from_df(spark, seen)
-    db = DistributedBloom(spark, TableStore(spark, str(tmp_path)),
-                          n_shards=8, bits_per_shard=1 << 12, n_hashes=3)
-    db.update_from_df(spark, seen)
-
-    dn_b, ms_b, bc = bloom_prefilter(spark, cand, sb)
-    dn_d, ms_d, _ = db.prefilter(cand)
-    assert {r["url_hash"] for r in dn_b.collect()} == {r["url_hash"] for r in dn_d.collect()}
-    assert {r["url_hash"] for r in ms_b.collect()} == {r["url_hash"] for r in ms_d.collect()}
-    if bc is not None:
-        bc.destroy()
-
-
-def test_distributed_bloom_incremental_or_merge(spark, tmp_path):
-    """Second update OR-merges into existing shard rows: earlier inserts
-    stay present, the shards table keeps one row per touched shard."""
-    from spider_spark.bloom import DistributedBloom
-    from spider_spark.storage import TableStore
-
-    store = TableStore(spark, str(tmp_path))
-    db = DistributedBloom(spark, store, n_shards=8, bits_per_shard=1 << 12, n_hashes=3)
-    first = spark.createDataFrame([(i * 104729,) for i in range(100)], "url_hash long")
-    second = spark.createDataFrame([(i * 104729,) for i in range(100, 200)], "url_hash long")
-    db.update_from_df(spark, first)
-    db.update_from_df(spark, second)
-
-    both = first.union(second)
-    _dn, ms, _ = db.prefilter(both)
-    # no false negatives across the merge: every inserted key reads maybe
-    assert ms.count() == 200
-    rows = store.read(db.TABLE).collect()
-    assert len(rows) == len({r["shard"] for r in rows})  # unique shard rows

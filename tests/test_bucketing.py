@@ -1,8 +1,7 @@
 """Bucketed seen/media tables (VERDICT r2 #4): the per-round exact
 anti-join must open only candidate buckets (manifest-level pruning), and
 bucketing must never change crawl results — it is an optimization of
-WHICH files are scanned, like the Bloom filter is of which rows are
-exact-checked."""
+WHICH files are scanned, never of which rows are exact-checked."""
 
 from __future__ import annotations
 
@@ -46,7 +45,6 @@ def _run_crawl(spark, workdir, buckets):
 
     cfg = CrawlConfig(
         n_hosts=8, page_space=60, fetch_partitions=2,
-        use_bloom=True, bloom_shards=2, bloom_bits=1 << 12,
         seen_buckets=buckets, media_buckets=buckets, write_media_table=True,
     )
     seeds = synth.seed_list(spark, 40, 8, 60)

@@ -26,9 +26,6 @@ def crawled(spark, tmp_path_factory):
         global_cap=None,
         max_retries=2,
         fetch_partitions=4,
-        use_bloom=True,
-        bloom_shards=4,
-        bloom_bits=1 << 16,
     )
     seeds = synth.seed_list(spark, 120, N_HOSTS, PAGE_SPACE)
     hosts = synth.hosts_config(spark, N_HOSTS)
@@ -109,7 +106,7 @@ def crawled_with_robots_refresh(spark, tmp_path_factory):
 
     cfg = CrawlConfig(
         n_hosts=N_HOSTS, page_space=PAGE_SPACE, max_retries=2,
-        fetch_partitions=4, use_bloom=True, bloom_shards=4, bloom_bits=1 << 16,
+        fetch_partitions=4,
     )
     seeds = synth.seed_list(spark, 120, N_HOSTS, PAGE_SPACE)
     hosts = synth.hosts_config(spark, N_HOSTS)
@@ -176,7 +173,7 @@ def crawled_with_reprioritize(spark, tmp_path_factory):
     rounds.  refsim applies the same formula at the start of round 3."""
     cfg = CrawlConfig(
         n_hosts=N_HOSTS, page_space=PAGE_SPACE, max_retries=2,
-        fetch_partitions=4, use_bloom=True, bloom_shards=4, bloom_bits=1 << 16,
+        fetch_partitions=4,
     )
     seeds = synth.seed_list(spark, 120, N_HOSTS, PAGE_SPACE)
     hosts = synth.hosts_config(spark, N_HOSTS)

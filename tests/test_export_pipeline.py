@@ -20,7 +20,7 @@ N_HOSTS, PAGE_SPACE = 12, 200
 def test_incremental_export_packs_only_the_new_round(spark, tmp_path):
     cfg = CrawlConfig(
         n_hosts=N_HOSTS, page_space=PAGE_SPACE, max_retries=1,
-        fetch_partitions=2, use_bloom=False,
+        fetch_partitions=2,
     )
     crawler = Crawler(spark, str(tmp_path / "store"), cfg)
     crawler.bootstrap(

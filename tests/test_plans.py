@@ -216,7 +216,7 @@ def test_documents_round_partition_pruning(spark, tmp_path):
     from spider_spark.crawl import Crawler
     from spider_spark.round import CrawlConfig
 
-    cfg = CrawlConfig(n_hosts=8, page_space=150, fetch_partitions=2, use_bloom=False)
+    cfg = CrawlConfig(n_hosts=8, page_space=150, fetch_partitions=2)
     c = Crawler(spark, str(tmp_path), cfg)
     c.bootstrap(synth.seed_list(spark, 30, 8, 150), synth.hosts_config(spark, 8))
     c.run_rounds(3, expire_keep=10)

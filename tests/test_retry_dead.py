@@ -22,7 +22,6 @@ def test_errors_reach_dead_never_loop(spark, tmp_path):
         page_space=page_space,
         max_retries=1,
         fetch_partitions=4,
-        use_bloom=False,
     )
     seeds = synth.seed_list(spark, 60, n_hosts, page_space)
     hosts = synth.hosts_config(spark, n_hosts, uniform_delay=0, uniform_cap=1000, with_robots=False)

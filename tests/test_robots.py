@@ -79,7 +79,7 @@ def test_hosts_cache_refresh_and_enforcement(spark, tmp_path):
     assert kept == {"http://h0.example/p2", "http://h1.example/p10"}
 
     # cache refresh: MERGE into a live crawler's hosts table
-    cfg = CrawlConfig(n_hosts=5, page_space=100, fetch_partitions=2, use_bloom=False)
+    cfg = CrawlConfig(n_hosts=5, page_space=100, fetch_partitions=2)
     c = Crawler(spark, str(tmp_path), cfg)
     c.bootstrap(synth.seed_list(spark, 10, 5, 100), synth.hosts_config(spark, 5))
     before = c.store.read("hosts").count()

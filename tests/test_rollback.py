@@ -2,7 +2,8 @@
 rollback analog): restoring an earlier snapshot is a NEW history-
 preserving commit that copies the target's members; rolled-past
 snapshots stay time-travelable; streaming txn watermarks ride the
-rollback (never rewind); staged targets are refused; incremental scans
+rollback (never rewind); staged targets are refused until publish or
+fast_forward exposes them; incremental scans
 across the rollback boundary raise instead of answering wrong."""
 
 from __future__ import annotations
@@ -123,3 +124,39 @@ def test_rollback_keeps_partition_pruning(spark, tmp_path):
     store.rollback("t", version=v0)
     got = store.read_partitions("t", [1])
     assert _ks(got) == [1, 4, 7, 10]
+
+
+def test_rollback_to_published_wap_snapshot(spark, tmp_path):
+    """A staged snapshot that publish() exposed is an ordinary rollback
+    target (it is the audited recovery point); history stops calling it
+    staged.  A snapshot staged and never published is still refused."""
+    store = TableStore(spark, str(tmp_path))
+    store.write("t", _mk(spark, 0, 3))
+    audited = store.stage_append("t", _mk(spark, 3, 6))
+    store.publish("t", audited)
+    store.append("t", _mk(spark, 6, 9))         # the "bad" commit
+    store.rollback("t", version=audited)
+    assert _ks(store.read("t")) == list(range(6))
+    staged_flags = {h["version"]: h["staged"] for h in store.history("t")}
+    assert staged_flags[int(audited[1:])] is False
+    unaudited = store.stage_append("t", _mk(spark, 100, 102))
+    with pytest.raises(ValueError, match="staged"):
+        store.rollback("t", version=unaudited)
+    assert {h["version"]: h["staged"] for h in store.history("t")}[int(unaudited[1:])]
+
+
+def test_rollback_to_fast_forwarded_branch_head(spark, tmp_path):
+    """fast_forward() publishes a branch head: rolling back to it restores
+    the branch's content, while an unpublished branch commit stays
+    refused."""
+    store = TableStore(spark, str(tmp_path))
+    store.write("t", _mk(spark, 0, 3))
+    store.create_branch("t", "audit")
+    store.append_to_branch("t", "audit", _mk(spark, 3, 5))
+    head = store.fast_forward("t", "audit")
+    store.append("t", _mk(spark, 5, 9))         # the "bad" commit
+    store.rollback("t", version=head)
+    assert _ks(store.read("t")) == list(range(5))
+    pending = store.append_to_branch("t", "audit", _mk(spark, 50, 52))
+    with pytest.raises(ValueError, match="staged"):
+        store.rollback("t", version=pending)

@@ -31,9 +31,6 @@ def _cfg(**kw):
         global_cap=None,
         max_retries=2,
         fetch_partitions=4,
-        use_bloom=True,
-        bloom_shards=4,
-        bloom_bits=1 << 16,
     )
     base.update(kw)
     return CrawlConfig(**base)

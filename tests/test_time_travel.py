@@ -15,7 +15,7 @@ from spider_spark.storage import TableStore
 @pytest.fixture(scope="module")
 def crawled(spark, tmp_path_factory):
     wd = tmp_path_factory.mktemp("tt_store")
-    cfg = CrawlConfig(n_hosts=10, page_space=400, fetch_partitions=4, use_bloom=False)
+    cfg = CrawlConfig(n_hosts=10, page_space=400, fetch_partitions=4)
     c = Crawler(spark, str(wd), cfg)
     c.bootstrap(synth.seed_list(spark, 60, 10, 400), synth.hosts_config(spark, 10))
     res = c.run_rounds(3, expire_keep=50)

@@ -260,7 +260,6 @@ def test_http_transport_drives_full_crawl(spark, tmp_path):
 
     cfg = CrawlConfig(
         n_hosts=2, page_space=100, max_retries=1, fetch_partitions=2,
-        use_bloom=True, bloom_shards=2, bloom_bits=1 << 12,
         fetch_fn=make_http_fetch_fn(
             transport=site_transport, resend_times=0, sleep=lambda s: None
         ),
