@@ -23,7 +23,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     Exercises the whole engine: frontier dequeue (window rank + politeness
     caps), salted repartition, mapInPandas fetch+parse into interleaved
-    span arrays, vectorized canonicalization, bucket-pruned seen-set
+    span arrays, vectorized canonicalization, single-scan exact seen-set
     anti-join, MERGE-back + lineage (SURVEY.md §3.4).
     """
     from pyspark.sql import functions as F

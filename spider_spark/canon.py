@@ -126,6 +126,8 @@ def url_hash_col(url: Column) -> Column:
 
 def bucket_col(hash_col: Column, n_buckets: int) -> Column:
     """Storage bucket of a 64-bit key: pmod(hash, N) — the partition
-    column of the seen/media tables, so exact-dedup anti-joins prune to
-    candidate buckets at the manifest level (storage.read_partitions)."""
+    column of the seen/media tables.  Seen compaction rewrites one bucket
+    at a time; the round's seen anti-join reads every bucket's keys in
+    one scan, while the media dup-skip opens only the buckets its refs
+    hash into (storage.read_partitions)."""
     return F.pmod(hash_col, F.lit(n_buckets)).cast("int")

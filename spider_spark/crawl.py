@@ -62,8 +62,16 @@ class Crawler:
             self.spark.createDataFrame([], FRONTIER).unionByName(frontier0),
             partition_by=["state"],
         )
-        self.store.write("seen", self._with_seen_bucket(frontier0.select("url_hash", "url")),
-                         partition_by=["seen_bucket"] if self.cfg.seen_buckets else None)
+        # seen comes from the frontier just written, not from frontier0:
+        # re-deriving frontier0 would run the canonicalize UDF, the groupBy
+        # and the robots join a second time
+        self.store.write(
+            "seen",
+            self._with_seen_bucket(
+                self.store.read("frontier", columns=["url_hash", "url"])
+            ),
+            partition_by=["seen_bucket"] if self.cfg.seen_buckets else None,
+        )
         self.store.write("hosts", hosts)
         self.store.write("host_state", self.spark.createDataFrame([], HOST_STATE))
         self.store.write("lineage", self.spark.createDataFrame([], LINEAGE))
@@ -87,9 +95,10 @@ class Crawler:
             "seen_bucket", canon.bucket_col(F.col("url_hash"), self.cfg.seen_buckets)
         )
 
-    def _seen_reader(self, bucket_values) -> DataFrame:
-        """Manifest-pruned seen scan for the round's exact anti-join."""
-        return self.store.read_partitions("seen", bucket_values)
+    def _seen_keys(self) -> DataFrame:
+        """Every seen url_hash in one scan (storage.read projection): the
+        key side of the round, seed-ingest and audit anti-joins."""
+        return self.store.read("seen", columns=["url_hash"])
 
     # ------------------------------------------------------------ rounds
     def _materialize(self, name: str, df: DataFrame) -> DataFrame:
@@ -111,12 +120,11 @@ class Crawler:
                 self.cfg,
                 r,
                 self.store.read("frontier"),
-                self.store.read("seen"),
+                self._seen_keys(),
                 hosts_df,
                 self.store.read("host_state") if self.store.exists("host_state") else None,
                 record_order=record_order,
                 materialize=self._materialize,
-                seen_reader=self._seen_reader if self.cfg.seen_buckets else None,
             )
             if res.dequeued == 0:
                 # empty round: advance the clock (retry rows may be backed
@@ -235,9 +243,7 @@ class Crawler:
             "priority",
         )
         s = politeness.robots_allowed(s, self.store.read("hosts"))
-        new = s.join(
-            self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
-        ).cache()
+        new = s.join(self._seen_keys(), "url_hash", "left_anti").cache()
         n_new = new.count()
         if n_new:
             rid = self.store.last_committed_round() or 0
@@ -313,9 +319,7 @@ class Crawler:
             canon.url_hash_col(F.col("url")).alias("url_hash"),
             canon.host_col(F.col("url")).alias("host"),
         )
-        lost = exp.join(
-            self.store.read("seen").select("url_hash"), "url_hash", "left_anti"
-        ).cache()
+        lost = exp.join(self._seen_keys(), "url_hash", "left_anti").cache()
         n_lost = lost.count()
         if n_lost:
             rid = (self.store.last_committed_round() or 0) + 1

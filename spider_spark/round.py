@@ -2,11 +2,13 @@
 
 dequeue (W1) → politeness gates (T2/T3) → salted repartition → fetch+parse
 (mapInPandas) → documents append → link extraction → canonicalize →
-bucket-pruned exact seen anti-join (J5) → MERGE-back (frontier / seen /
-host_state / documents) → per-partition lineage rows (T1).
+exact seen anti-join against one scan of the seen keys (J5) → MERGE-back
+(frontier / seen / host_state / documents) → per-partition lineage rows
+(T1).
 
 The driver only sequences rounds; every data-touching step is a
-DataFrame op.
+DataFrame op, and the round's one driver action is the lineage collect,
+which also carries the candidate and new-URL counts.
 """
 
 from __future__ import annotations
@@ -40,11 +42,13 @@ class CrawlConfig:
     # saveImage/file-sink analog, share_func.py:224-249) with dup-key
     # skip — first sighting wins, like the reference's unique-key insert
     write_media_table: bool = False
-    # seen/media tables are bucketed by pmod(hash, N) so the per-round
-    # exact dedup anti-joins read only candidate buckets (manifest-level
-    # pruning) instead of the whole ever-grown key set; 0 disables.
-    # At 10^10 URLs size so one bucket's parquet fits an executor scan
-    # (e.g. 4096 buckets ≈ 2.4M keys/bucket).
+    # seen/media tables are bucketed by pmod(hash, N); 0 disables.  For
+    # seen the buckets bound compaction: each compact() rewrites one
+    # bucket's members, never the whole ever-grown key set.  The round's
+    # anti-join reads the url_hash column in ONE scan across all buckets:
+    # any real candidate set hashes into every bucket, so pruning would
+    # open them all anyway.  Media's dup-skip opens only the buckets its
+    # refs hash into (storage.read_partitions).
     seen_buckets: int = 16
     media_buckets: int = 16
     # two-phase hot-host dequeue rank (frontier.dequeue rank_salt): the
@@ -78,21 +82,20 @@ def run_round(
     cfg: CrawlConfig,
     round_id: int,
     frontier_df: DataFrame,
-    seen_df: DataFrame,
+    seen_keys: DataFrame,
     hosts_df: DataFrame,
     host_state_df: DataFrame | None,
     record_order: bool = False,
     materialize=None,
-    seen_reader=None,
 ) -> tuple[RoundResult, dict[str, DataFrame]]:
     """Pure-transform round: takes current table DataFrames, returns the
     round result + the updated DataFrames (caller persists via storage).
 
-    ``seen_reader(bucket_values) -> DataFrame``, when provided, returns
-    the seen slice restricted to those pmod(url_hash, cfg.seen_buckets)
-    buckets (storage.read_partitions) — the exact anti-join then opens
-    only the buckets its candidates hash into.  Without it, ``seen_df``
-    is scanned whole (correct, just O(all-ever-seen) per round).
+    ``seen_keys`` holds the ``url_hash`` of every seen URL; the Crawler
+    passes ``store.read("seen", columns=["url_hash"])``, one parquet scan
+    per equality-delete group whatever the bucket count.  The exact
+    anti-join reads it whole: every per-round count comes out of the one
+    lineage collect, so no driver action runs just to prune or count.
 
     ``materialize(name, df) -> DataFrame`` pins an intermediate for reuse
     across the round's several consumers.  The Crawler passes a
@@ -165,25 +168,7 @@ def run_round(
         )
     )
     cand = politeness.robots_allowed(cand, hosts_df).cache()
-    n_cand = cand.count()
-
-    if seen_reader is not None and cfg.seen_buckets:
-        # bucket-pruned exact check: collect the candidate buckets (a
-        # bounded-size distinct reading only the cached cand) and open
-        # just those seen members.  A bucket with no candidate hash
-        # cannot produce an anti-join match.
-        cand_buckets = [
-            r["b"]
-            for r in cand.select(
-                canon.bucket_col(F.col("url_hash"), cfg.seen_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        ]
-        seen_scan = seen_reader(cand_buckets)
-    else:
-        seen_scan = seen_df
-    new_links = cand.join(seen_scan.select("url_hash"), "url_hash", "left_anti").cache()
+    new_links = cand.join(seen_keys.select("url_hash"), "url_hash", "left_anti").cache()
 
     # ---- MERGE-able outputs
     updates = frontier.state_updates(results, round_id, cfg.max_retries)
@@ -217,15 +202,31 @@ def run_round(
         )
     )
 
-    # ONE driver action covers both the lineage sink and the round
-    # metrics: the per-partition rows are tiny (<= fetch partitions), so
-    # collect them, sum in python, and hand the store a local-relation
-    # DataFrame — no second results.agg job (VERDICT r1 #8).
-    lineage_rows = lineage.collect()
+    # ONE driver action covers the lineage sink and every round metric:
+    # the per-partition rows are tiny (<= fetch partitions), so union
+    # them with one totals row (candidates, new links), collect, sum in
+    # python, and hand the store a local-relation DataFrame — no
+    # results.agg job (VERDICT r1 #8).  A union adds no exchange, so the
+    # counts cost one single-partition aggregate; the collect also fills
+    # the new_links cache that the MERGE-back writes read.
+    is_new = F.col("is_new")
+    totals = (
+        cand.select(F.lit(False).alias("is_new"))
+        .unionByName(new_links.select(F.lit(True).alias("is_new")))
+        .agg(
+            F.count(F.when(~is_new, 1)).alias("n_cand"),
+            F.count(F.when(is_new, 1)).alias("n_new"),
+        )
+    )
+    rows = lineage.unionByName(totals, allowMissingColumns=True).collect()
+    (tot,) = [r for r in rows if r["n_cand"] is not None]
+    lineage_rows = [r for r in rows if r["n_cand"] is None]
     n_deq = sum(r["dequeued"] for r in lineage_rows)
     n_ok = sum(r["fetched_ok"] for r in lineage_rows)
-    lineage = spark.createDataFrame(lineage_rows, LINEAGE)
-    n_new = new_links.count()
+    n_cand, n_new = tot["n_cand"], tot["n_new"]
+    lineage = spark.createDataFrame(
+        [tuple(r[f.name] for f in LINEAGE.fields) for r in lineage_rows], LINEAGE
+    )
     batch_urls = None
     if record_order:
         batch_urls = [

@@ -277,8 +277,15 @@ class TableStore:
         return since is not None and cls._member_seq(member) < since
 
     # ------------------------------------------------------------ read
-    def read(self, table: str) -> DataFrame:
-        return self._read_members(table, self._manifest(table))
+    def read(self, table: str, columns: list[str] | None = None) -> DataFrame:
+        """The current snapshot, optionally projected to ``columns``.
+
+        A projection that leaves out the partition column needs no
+        per-value literal attach, so every member is read by ONE parquet
+        scan per equality-delete group instead of one union branch per
+        partition value — the 16-bucket seen table's key column is a
+        single scan, not a 16-way union."""
+        return self._read_members(table, self._manifest(table), columns=columns)
 
     def read_at(self, table: str, round_id: int | None = None, version: str | None = None) -> DataFrame:
         """Iceberg time-travel read: the table AS OF a committed round
@@ -350,10 +357,11 @@ class TableStore:
         whose partition value is in ``values`` — the files of every other
         partition are never opened (Iceberg partition-pruning analog).
 
-        This is how grow-forever key sets stay joinable at 10^10 rows:
-        the seen/media tables are bucketed by pmod(hash, N), and a round's
-        exact dedup anti-join reads just the buckets its candidates hash
-        into — O(candidate buckets), not O(all-ever-seen) (VERDICT r2 #4)."""
+        The media table is bucketed by pmod(hash, N), and a round's
+        media dup-skip reads just the buckets its refs hash into (VERDICT
+        r2 #4).  The seen anti-join does not use it: any real candidate
+        set opens every seen bucket, so it reads ``read("seen",
+        columns=["url_hash"])`` in one scan instead."""
         keep = {str(v) for v in values}
         m = self._manifest(table)
         pre = [x for x in m["members"] if self._pre_spec(m, x)]
@@ -570,7 +578,11 @@ class TableStore:
         ]
 
     def _read_members(
-        self, table: str, manifest: dict, skip_values: set[str] | None = None
+        self,
+        table: str,
+        manifest: dict,
+        skip_values: set[str] | None = None,
+        columns: list[str] | None = None,
     ) -> DataFrame:
         """Assemble the table DataFrame from manifest members.
 
@@ -579,9 +591,14 @@ class TableStore:
         ``state IN ('pending','retry')`` constant-folds each union branch,
         so terminal partitions are pruned at the MANIFEST level — their
         files are never opened (the Iceberg partition-pruning analog).
+
+        When ``columns`` leaves the partition column out (and no delete
+        keys on it), there is nothing to attach or prune: pre-spec and
+        post-spec members of every value are read alike, one scan per
+        equality-delete group.
         """
         schema = StructType.fromJson(json.loads(manifest["schema"]))
-        cols = manifest["columns"]
+        cols = manifest["columns"] if columns is None else list(columns)
         pcol = manifest.get("partition_col")
         members = manifest["members"]
         if skip_values is not None:
@@ -605,13 +622,19 @@ class TableStore:
             return df.join(kd, on=key, how="left_anti")
 
         parts: list[DataFrame] = []
-        if pcol is None:
+        if pcol is None or (
+            pcol not in cols and all(d["key"] != pcol for d in deletes)
+        ):
             by_appl: dict[tuple[int, ...], list[str]] = {}
             for m in members:
                 by_appl.setdefault(applicable(m), []).append(os.path.join(tdir, m["path"]))
             for appl, paths in by_appl.items():
+                # the delete key rides along until the anti-join drops rows
+                need = cols + [deletes[appl[0]]["key"]] if appl else cols
+                read_schema = StructType([schema[c] for c in dict.fromkeys(need)])
                 parts.append(
-                    anti(self.spark.read.schema(schema).parquet(*paths).select(cols), appl)
+                    anti(self.spark.read.schema(read_schema).parquet(*paths), appl)
+                    .select(cols)
                 )
         else:
             ptype = schema[pcol].dataType
@@ -632,17 +655,16 @@ class TableStore:
                 )
             for appl, paths in pre_by_appl.items():
                 parts.append(
-                    anti(self.spark.read.schema(schema).parquet(*paths).select(cols), appl)
+                    anti(self.spark.read.schema(schema).parquet(*paths), appl).select(cols)
                 )
             for (value, appl), paths in by_group.items():
                 parts.append(
                     anti(
                         self.spark.read.schema(data_schema)
                         .parquet(*paths)
-                        .withColumn(pcol, F.lit(value).cast(ptype))
-                        .select(cols),
+                        .withColumn(pcol, F.lit(value).cast(ptype)),
                         appl,
-                    )
+                    ).select(cols)
                 )
         if not parts:
             return self.spark.createDataFrame([], schema).select(cols)

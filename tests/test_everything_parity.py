@@ -7,8 +7,8 @@ simulator's crawl order, seen set, and frontier states exactly.
 
 Each feature is results-neutral by its own test (test_bucketing,
 test_skew, test_crawl_parity); this gate catches INTERACTIONS between
-them (e.g. the bucket-pruned seen anti-join under a refresh that strands
-queued rows).
+them (e.g. the single-scan seen anti-join over a bucketed seen table under
+a refresh that strands queued rows).
 """
 
 from __future__ import annotations
